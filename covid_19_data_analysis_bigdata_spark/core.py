@@ -43,73 +43,70 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-#: Front-of-registry order for round 14.  External correctness sweeps
+#: Front-of-registry order for round 15.  External correctness sweeps
 #: sample the first 50 registry entries in iteration order.  The
-#: never-sampled pool CLOSED in r13 (530/530 external coverage), so
-#: from r14 the window's job is FRESHNESS (SCALE.md §"r14 window
-#: plan"): (1) the round's new ids first (never-sampled by
-#: construction), (2) the r13-verdict front-loads — the post-fix
-#: ``agg_decimal_exact`` plus the two ids whose only driver rows are
-#: stale r04 hash-fails fixed since r05 — and the two r14-changed
-#: queries, (3) a refresh of the oldest external evidence: 30 of the
-#: 49 ids whose latest row is r03 (exactly at the ≤60% share cap vs
-#: the r03 artifact; the rest roll to r15) back-filled with 13 of the
-#: 34 r02-stale ids.
+#: window's job is FRESHNESS (SCALE.md §"r15 window plan"): (1) the one
+#: never-sampled id, (2) the 19 ids whose latest external row is r03
+#: (the ≤60% share cap vs the r03 artifact stopped the r14 window at 30
+#: of 49), (3) the 18 strong ids whose latest row is r02 (20 such ids,
+#: the 2 weak sketches left out), then, by the r14 plan's rule, the
+#: next-oldest ids back-filled to 50 in registration order: 12 of the
+#: 48 r04-stale ids.  Within each group, registration order.
 _WINDOW_PRIORITY: list[str] = [
-    # ---- r14-new ids ----
-    "stream_interval_join_right",
-    "llm_ann_beam",
-    # ---- r13-verdict front-loads + r14-changed queries ----
-    "agg_decimal_exact",     # scaled-BIGINT emit: first hash-safe driver row
-    "dq_expectations",       # stale r04 fail; green in every sweep since r05
-    "etl_incremental_agg",   # stale r04 fail; green in every sweep since r05
-    "unpivot_melt",          # r14: checked output shrunk to summary
-    "dq_id_gaps",            # r14: deterministic key-range sharding
-    # ---- freshness refresh: 30 of the 49 r03-stale ids ----
-    "str_funcs",
-    "str_split_regex",
-    "date_funcs",
-    "ts_funcs",
-    "cond_funcs",
-    "hash_funcs",
-    "array_funcs",
-    "array_hof",
-    "map_funcs",
-    "json_funcs",
-    "safe_arith_funcs",
-    "bit_funcs",
-    "json_variant_funcs",
-    "udf_python_scalar",
-    "udf_pandas_vectorized",
-    "udaf_applyinpandas",
-    "udaf_pandas_grouped_agg",
-    "udtf_table_fn",
-    "multimodal_decode_stub",
-    "udf_mapinarrow",
-    "obs_metrics_passthrough",
-    "udtf_analyze_polymorphic",
-    "stream_tumbling_counts",
-    "stream_sliding",
-    "stream_session",
-    "stream_watermark_late",
-    "stream_dedup",
-    "stream_stateful_running",
-    "stream_static_join",
-    "stream_stream_join",
-    # ---- freshness refresh: 13 of the 34 r02-stale ids ----
-    "filter_simple",
-    "filter_null_handling",
-    "cast_types",
-    "sample_rows",
-    "limit_offset",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "set_union_by_name",
-    "join_cross",
-    "join_null_safe",
-    "join_shuffle_hash",
+    # ---- never sampled ----
+    "llm_ann_recall",
+    # ---- the 19 r03-stale ids ----
+    "stream_file_sink",
+    "stream_foreach_batch",
+    "stream_multi_batch_replay",
+    "llm_dedup_exact",
+    "llm_dedup_fuzzy",
+    "llm_sim_cosine_pairs",
+    "llm_sim_topk",
+    "llm_knn_per_query",
+    "llm_centroids",
+    "llm_semantic_groupby",
+    "llm_text_tokens",
+    "llm_tfidf",
+    "llm_text_stats",
+    "llm_ngrams",
+    "llm_multimodal_struct",
+    "llm_inverted_index",
+    "llm_pmi_cooccur",
+    "llm_lang_id",
+    "llm_quality_score",
+    # ---- the 18 strong r02-stale ids ----
+    "sample_stratified",
+    "set_except_all",
+    "set_intersect_all",
+    "join_range_binned",
+    "agg_ratio",
+    "agg_count_distinct",
+    "agg_stats",
+    "agg_percentile",
+    "agg_filtered",
+    "agg_collect",
+    "agg_rollup",
+    "agg_cube",
+    "agg_grouping_sets",
+    "pivot_wide",
+    "agg_histogram",
+    "agg_mode",
+    "agg_corr_exact",
+    "agg_listagg",
+    # ---- back-fill: 12 of the 48 r04-stale ids ----
+    "math_funcs",
+    "ts_trend_forecast",
+    "ts_resample_ffill",
+    "etl_upsert_scd1",
+    "etl_keep_latest",
+    "etl_scd2_intervals",
+    "etl_compact_small_files",
+    "etl_partition_overwrite",
+    "dq_profile_columns",
+    "etl_cascade_delete",
+    "dq_benford_digits",
+    "dq_entropy_drift",
 ]
 
 

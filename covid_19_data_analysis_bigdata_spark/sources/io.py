@@ -146,19 +146,41 @@ def spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(cores)
 
 
-def _source_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the source parquet files (name+size+mtime).
+def _parquet_footer(path: str) -> bytes:
+    """Raw footer bytes of one parquet file: its serialized FileMetaData.
 
-    Keys every cached fixture: regenerating the testdata changes the
-    fingerprint, so stale fixtures are abandoned instead of silently
+    A parquet file ends ``<footer><4-byte LE footer length>PAR1``.
+    """
+    with open(path, "rb") as f:
+        f.seek(-8, os.SEEK_END)
+        tail = f.read(8)
+        if tail[4:] != b"PAR1":
+            raise ValueError(f"{path} is not a parquet file")
+        n = int.from_bytes(tail[:4], "little")
+        f.seek(-8 - n, os.SEEK_END)
+        return f.read(n)
+
+
+def _source_fingerprint(sf_dir: str) -> str:
+    """Content fingerprint of the source parquet files.
+
+    Hashes each table's file name plus the raw parquet footer of every
+    file behind it (for a ``name.parquet/`` dataset directory, each part
+    file's footer).  The footer holds the schema, the row groups, their
+    column-chunk sizes and statistics, so regenerated data changes the
+    key, while a copy of the same files (new mtimes, new path) keeps it.
+    Reading footers only costs well under a millisecond per call, which
+    matters because ``fixture_dir`` calls this inside timed queries.
+
+    Keys every cached fixture, the CHECK_r*.txt artifact headers and the
+    sketch pins: stale fixtures are abandoned instead of silently
     compared against a fresh oracle.
     """
     h = hashlib.md5()
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        st = os.stat(p)
-        h.update(
-            f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}".encode()
-        )
+        h.update(os.path.basename(p).encode())
+        for f in sorted(glob.glob(os.path.join(p, "*.parquet"))) or [p]:
+            h.update(_parquet_footer(f))
     return h.hexdigest()[:12]
 
 

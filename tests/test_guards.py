@@ -223,30 +223,65 @@ class TestStrictComparator:
 def test_committed_check_artifact_not_stale():
     """A committed CHECK_r*.txt must carry a source-fingerprint header
     matching the CURRENT testdata — regenerated testdata changes the
-    fingerprint, so stale green can never be presented as evidence."""
-    repo = pathlib.Path(__file__).resolve().parents[1]
-    artifacts = sorted(
-        repo.glob("CHECK_r*.txt"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    if not artifacts:
-        pytest.skip("no committed CHECK artifact yet")
-    latest = artifacts[-1]
-    first = latest.read_text().splitlines()[0]
-    m = re.match(r"# sf_dir=(\S+) source_fingerprint=(\w+)", first)
-    assert m, (
-        f"{latest.name} lacks a fingerprint header — regenerate with tools/check.py"
-    )
-    sf_dir, fp = m.groups()
+    fingerprint, so stale green can never be presented as evidence.
+    Every artifact of the newest round is checked (the full sweep, the
+    sf0.1 sweep and the plain front-50 share a round number)."""
     import glob as _glob
 
-    if not _glob.glob(f"{sf_dir}/*.parquet"):
-        pytest.skip(f"{sf_dir} not present on this machine — cannot date the artifact")
     from covid_19_data_analysis_bigdata_spark.sources.io import _source_fingerprint
 
-    assert _source_fingerprint(sf_dir) == fp, (
-        f"{latest.name} was generated against different testdata; rerun tools/check.py"
-    )
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    by_round: dict[int, list[pathlib.Path]] = {}
+    for p in repo.glob("CHECK_r*.txt"):
+        by_round.setdefault(int(re.search(r"r(\d+)", p.name).group(1)), []).append(p)
+    if not by_round:
+        pytest.skip("no committed CHECK artifact yet")
+    checked = 0
+    for art in sorted(by_round[max(by_round)]):
+        first = art.read_text().splitlines()[0]
+        m = re.match(r"# sf_dir=(\S+) source_fingerprint=(\w+)", first)
+        assert m, (
+            f"{art.name} lacks a fingerprint header — regenerate with tools/check.py"
+        )
+        sf_dir, fp = m.groups()
+        if not _glob.glob(f"{sf_dir}/*.parquet"):
+            continue
+        assert _source_fingerprint(sf_dir) == fp, (
+            f"{art.name} was generated against different testdata; rerun tools/check.py"
+        )
+        checked += 1
+    if not checked:
+        pytest.skip("no newest-round artifact's sf_dir is present on this machine "
+                    "— cannot date the artifacts")
+
+
+def test_source_fingerprint_keys_on_content_not_mtime(sf_dir, tmp_path):
+    """A copied corpus (new path, new mtimes) keeps its fingerprint, so
+    the artifact headers, fixture keys and sketch pins survive a re-copy
+    of unchanged testdata; so does a table stored as a ``name.parquet/``
+    dataset directory of the same file.  Changing one file's content
+    changes it."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from covid_19_data_analysis_bigdata_spark.sources.io import _source_fingerprint
+
+    copy = tmp_path / "copy"
+    shutil.copytree(sf_dir, copy, copy_function=shutil.copy)  # mtimes not kept
+    src, dst = pathlib.Path(sf_dir, "nation.parquet"), copy / "nation.parquet"
+    assert os.stat(src).st_mtime_ns != os.stat(dst).st_mtime_ns
+    assert _source_fingerprint(str(copy)) == _source_fingerprint(sf_dir)
+
+    dst.unlink()
+    dst.mkdir()
+    shutil.copy(src, dst / "part-00000.parquet")
+    assert _source_fingerprint(str(copy)) == _source_fingerprint(sf_dir)
+
+    (dst / "part-00000.parquet").unlink()
+    pq.write_table(pq.read_table(src).slice(1), dst / "part-00000.parquet")
+    assert _source_fingerprint(str(copy)) != _source_fingerprint(sf_dir)
 
 
 class TestOracleTypeLattice:
